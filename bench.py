@@ -1229,6 +1229,28 @@ def main():
                     sum(min(xs) for xs in samples.values()), 3
                 ),
                 "runs": runs,
+                # real sample count per query: the ANN probes take two
+                # extra samples, and the extra/x10 pools take runs - 2
+                "runs_per_query": {
+                    n: len(xs)
+                    for pool in (samples, extra_samples)
+                    for n, xs in pool.items()
+                },
+                "runs_per_query_x10": {
+                    n: len(xs) for n, xs in x10_samples.items()
+                },
+                "statistic": {
+                    "value": "sum of queries",
+                    "queries": "median",
+                    "queries_min": "min",
+                    "value_min_sum": "sum of queries_min",
+                    "oracle_sec": "median",
+                    "vs_oracle": "median / median",
+                    "vs_oracle_min": "min / min",
+                    "queries_extra": "median",
+                    "queries_x10": "median",
+                    "scaling_x10": "min x10 / min x1",
+                },
                 "samples": samples,
                 # single-node DuckDB yardstick (see ORACLE_QUERIES):
                 # ratio = spark_median / duckdb_median, tracked per round
@@ -1270,361 +1292,11 @@ def main():
                 "scaling_x10": scaling_x10,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "note": "compact tail twin of the full board line above",
+                "statistic": {"value": "sum of medians", "queries": "min"},
             }
         )
     )
 
 
-# ---------------------------------------------------------------------------
-# APPENDIX — one-time sf1 (on-disk) scaling spot-check, r11
-# ---------------------------------------------------------------------------
-# The x10 harness measures operators over PERSISTED replicated frames,
-# which validates shuffle volume but not file-count / footer-stat
-# behavior at 10x the FILES. r11 ran the three biggest queries once
-# against the same replicas MATERIALIZED to 32 real parquet files each
-# (/tmp/bench_sf1, ~sf1 data volume), 3-run mins on the same box as
-# that session's x10 numbers:
-#
-#   b10 corpus curation  5.07s  (x10 in-memory same session: 4.40)
-#   e4 exact window dedup 5.32s (x10 in-memory same session: 5.42)
-#   b3 upsert+timetravel 4.17s  (x10 same shape: 3.67-4.0 band)
-#
-# Verdict: scaling matched the x10-predicted exponent — the only delta
-# is a bounded +0.5-0.7s cold-scan term where x10 read cached frames
-# (b10), and e4/b3 were flat within the box's noise band. No
-# file-count or footer-stat pathology appeared at 10x the files; the
-# pinned x10 floors extrapolate.
-
-# ---------------------------------------------------------------------------
-# APPENDIX — r12 quiet-box board re-pin (VERDICT r11 #1)
-# ---------------------------------------------------------------------------
-# The r11 board was judged load-contaminated. r12 re-ran the full
-# 5-sample protocol on a measured-idle box (load 0.16 pre-run, 0 user
-# sessions). Findings:
-#
-# 1. SAMPLES ARE CLEAN: tight, monotonically-warming, spike-free
-#    (b4: [1.685, 1.701, 1.481, 1.393, 1.272]) — no co-tenant events.
-# 2. THE THREE CARRIED X10 ITEMS ARE EXONERATED, all back at their
-#    r10 scaling with zero code change to their paths:
-#      e5_semantic_dedup  x10 scaling 1.59  (r10 1.54, r11 4.24)
-#      e7_label_window    x10 scaling 2.32  (r10 1.62, r11 5.23)
-#      e8_negative_sampl. x10 3.43s / 2.04  (r10 2.51s ~2.0, r11 7.77)
-#    The r11 x10 drift was load, as suspected.
-# 3. A UNIFORM SPARK-SIDE MULTIPLIER REMAINS vs the r10 session:
-#    every headline min sits 1.35-1.45x above its r10 min (b3 1.15 vs
-#    0.84, b4 1.27 vs 0.88, b6 0.86 vs 0.61, b8 1.50 vs 1.07) — while
-#    the DuckDB oracle runs AT r10 speed on the same session (b1
-#    oracle 0.051 = r10's 0.051; b6 oracle 0.268 < r10's 0.354). A
-#    uniform multiplier across ALL queries, including paths untouched
-#    since r9, with single-thread DuckDB unchanged, is platform
-#    multicore throughput (a 32-process spin probe measured 0.68
-#    parallel efficiency this session), not a code regression — no
-#    per-query action is available or warranted. Round-over-round
-#    comparisons should normalize by this board, not r10's.
-# 4. b1_scan_filter stayed >2x vs_oracle on the quiet box (min 2.48):
-#    floor-pinned in its docstring (zero-data shape = 0.098s vs whole
-#    DuckDB query 0.051s => ratio floor ~1.9 before data). b2's pinned
-#    floor note stands. b6's ratio (3.5-4.0) is the same multiplier
-#    vs a FASTER oracle sample; its 5M-distinct exact-count floor note
-#    stands.
-
-def hint_ab():
-    """A/B for VERDICT r14 watch-item #2: does the compiler's hint
-    bookkeeping (filter + keep-set computation, read_source hint
-    kwargs) add measurable plan time to the small scheduling-floor
-    queries? Runs b1/b2 shapes N times compiled with push_hints on vs
-    off (compile_query knob, same exact semantics) and prints mins.
-    Invoke: python bench.py --hint-ab  (never concurrently with the
-    main board)."""
-    from feature_store_api_spark.plans.compiler import compile_query
-
-    spark = get_spark("fsas-bench-ab")
-    read_parquet(spark, f"{SF_DIR}/nation.parquet").count()
-    cat = testdata_catalog(spark, SF_DIR)
-
-    def q_b1():
-        li = cat.get_feature_group("lineitem")
-        return (
-            li.select(["l_orderkey", "l_linenumber", "l_extendedprice",
-                       "l_discount", "l_shipdate"])
-            .filter((li.l_shipdate < "1996-01-01") & (li.l_discount >= 0.05))
-        )
-
-    def q_b2():
-        o, c, n = (cat.get_feature_group(x)
-                   for x in ("orders", "customer", "nation"))
-        return (
-            o.select(["o_orderkey", "o_custkey", "o_totalprice"])
-            .join(c.select(["c_custkey", "c_name", "c_nationkey"]),
-                  left_on=["o_custkey"], right_on=["c_custkey"])
-            .join(n.select(["n_name"]),
-                  left_on=["c_nationkey"], right_on=["n_nationkey"],
-                  prefix="nat_")
-            .filter(o.o_totalprice > 100000)
-        )
-
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "9"))
-    out = {}
-    for name, qf in (("b1", q_b1), ("b2", q_b2)):
-        # warm BOTH configs first, then INTERLEAVE samples — a
-        # sequential on-then-off order would hand the second config all
-        # the shared warm-up (relation caches, codegen) and fake a win
-        _force(compile_query(qf(), spark, push_hints=True))
-        _force(compile_query(qf(), spark, push_hints=False))
-        ts = {True: [], False: []}
-        for _ in range(runs):
-            for hints in (True, False):
-                t0 = time.time()
-                _force(compile_query(qf(), spark, push_hints=hints))
-                ts[hints].append(round(time.time() - t0, 4))
-        for hints in (True, False):
-            key = f"{name}_hints_{'on' if hints else 'off'}"
-            v = ts[hints]
-            out[key] = {"min": min(v), "median": sorted(v)[len(v) // 2],
-                        "samples": v}
-            print(f"# {key}: min {min(v)} median {sorted(v)[len(v)//2]} "
-                  f"{v}", file=sys.stderr)
-    print(json.dumps({"metric": "hint_ab", "sf": SF, "results": out}))
-
-
-def prune_ab():
-    """One-number quantification of the r14/r15 pruning machinery
-    (VERDICT r14 #6): a FeatureView batch-window read over MANAGED
-    event-time-partitioned groups, timed with the window hints active
-    (normal path: spine gets both bounds, feature side the PIT-safe
-    upper bound -> PartitionFilters under the PIT window) vs with
-    _event_bound_hint disabled (the pre-r15 behavior: full scan, the
-    range applied only above the window). Invoke:
-    python bench.py --prune-ab."""
-    import datetime as dt
-
-    from pyspark.sql import Window as W
-
-    from feature_store_api_spark import FeatureStore
-    from feature_store_api_spark.feature_view import FeatureView
-
-    spark = get_spark("fsas-bench-prune")
-    read_parquet(spark, f"{SF_DIR}/nation.parquet").count()
-    tmp = tempfile.mkdtemp(prefix="bench_prune_")
-    try:
-        # a YEAR of day-partitioned spine history (the testdata's
-        # events span ~3 weeks; replicate across 12 month offsets so
-        # the 2-week window is ~4% of the table — the scenario the
-        # pushdown exists for: "a one-week batch read of a year of
-        # date-partitioned history must not scan every file")
-        base = read_parquet(spark, f"{SF_DIR}/events.parquet").select(
-            "event_id", "user_id", "ts"
-        )
-        months = spark.range(12).select(
-            F.col("id").cast("int").alias("moff"))
-        ev = (
-            base.crossJoin(months)
-            .select(
-                (F.col("event_id") + F.col("moff") * 10_000_000)
-                .alias("event_id"),
-                "user_id",
-                F.date_trunc(
-                    "day", F.col("ts") - F.expr(
-                        "make_interval(0, moff, 0, 0, 0, 0, 0)")
-                ).cast("timestamp_ntz").alias("ts"),
-            )
-            .repartition(48, "ts")
-        )
-        feat = (
-            read_parquet(spark, f"{SF_DIR}/orders.parquet")
-            .select(
-                "o_custkey",
-                F.date_trunc("month", F.col("o_orderdate"))
-                .cast("timestamp_ntz").alias("ots"),
-                "o_totalprice", "o_orderstatus",
-            )
-            .withColumn("rn", F.row_number().over(
-                W.partitionBy("o_custkey", "ots").orderBy(
-                    F.col("o_totalprice").desc(),
-                    F.col("o_orderstatus").desc())))
-            .where(F.col("rn") == 1).drop("rn")
-        )
-        fs = FeatureStore(root=tmp)
-        sfg = fs.create_feature_group(
-            "pa_events", primary_key=["event_id"], event_time="ts",
-            partition_key=["ts"])
-        sfg.insert(ev, compute_stats=False)
-        ffg = fs.create_feature_group(
-            "pa_orders", primary_key=["o_custkey"], event_time="ots",
-            partition_key=["ots"])
-        ffg.insert(feat.coalesce(8), compute_stats=False)
-        fv = fs.create_feature_view(
-            "pa_view",
-            sfg.select(["event_id", "user_id", "ts"]).join(
-                ffg.select(["o_totalprice"]),
-                left_on=["user_id"], right_on=["o_custkey"],
-                prefix="ord_"))
-
-        runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-        out = {}
-        # the scale-faithful operand: ROWS the spine scan feeds into
-        # the PIT union with vs without the window hint (at bench SF
-        # the absolute seconds are dominated by fixed plan/scheduling
-        # costs; at 100 TB the scan bytes ARE the cost)
-        hint = [("ts", ">=", dt.datetime(2024, 1, 8)),
-                ("ts", "<", dt.datetime(2024, 1, 22))]
-        out["spine_rows_scanned"] = {
-            "pruned": sfg.read_source(spark, filters=hint).count(),
-            "unpruned": sfg.read_source(spark).count(),
-        }
-        print(f"# spine rows into the PIT union: "
-              f"{out['spine_rows_scanned']}", file=sys.stderr)
-        # class access strips the staticmethod wrapper; keep the raw
-        # descriptor so the finally-restore doesn't leave a plain
-        # function that would bind self on later instance access
-        real_hint = FeatureView.__dict__["_event_bound_hint"]
-
-        def read_window():
-            fv.get_batch_data(
-                spark, start_time=dt.datetime(2024, 1, 8),
-                end_time=dt.datetime(2024, 1, 22),
-            ).write.format("noop").mode("overwrite").save()
-
-        for mode in ("pruned", "unpruned"):
-            if mode == "unpruned":
-                FeatureView._event_bound_hint = staticmethod(
-                    lambda fg, start_ms=None, end_ms=None: None)
-            try:
-                read_window()  # codegen warmup
-                ts = []
-                for _ in range(runs):
-                    t0 = time.time()
-                    read_window()
-                    ts.append(round(time.time() - t0, 4))
-            finally:
-                FeatureView._event_bound_hint = real_hint
-            out[mode] = {"min": min(ts),
-                         "median": sorted(ts)[len(ts) // 2],
-                         "samples": ts}
-            print(f"# batch_window {mode}: min {min(ts)} median "
-                  f"{sorted(ts)[len(ts)//2]} {ts}", file=sys.stderr)
-        print(json.dumps({"metric": "prune_ab", "sf": SF, "results": out}))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 if __name__ == "__main__":
-    if "--hint-ab" in sys.argv:
-        hint_ab()
-    elif "--prune-ab" in sys.argv:
-        prune_ab()
-    else:
-        main()
-
-# ---------------------------------------------------------------------------
-# APPENDIX — r13 session board (VERDICT r12 #4 normalization follow-through)
-# ---------------------------------------------------------------------------
-# Protocol: measured-quiet box (load 0.22 pre-run, 0 user sessions, no
-# concurrent pytest/sweeps), full 5-sample min/median board committed as
-# BENCH_r13_session.json. Findings vs BENCH_r12_quiet_session.json (the
-# canonical operand per the r12 verdict):
-#
-# 1. THE PLATFORM MULTIPLIER PERSISTS AND IS NOW VISIBLE SINGLE-THREAD:
-#    every Spark min sits 1.18-1.48x above its r12-quiet min UNIFORMLY
-#    (b1 0.152 vs 0.124, b4 1.582 vs 1.272, b8 1.947 vs 1.503, b11
-#    0.621 vs 0.421) — including paths with ZERO code change since r9 —
-#    and this session the single-thread DuckDB oracle is slower by the
-#    same family of factors (b1 0.061 vs 0.051, b2 0.058 vs 0.051, b6
-#    0.296 vs 0.268, ~1.1-1.2x). The 32-process spin probe measured
-#    0.67 parallel efficiency (r12: 0.68). Both signals together say
-#    box throughput (clock + multicore contention), not code.
-# 2. THE NORMALIZED OPERAND IS FLAT: vs_oracle_min b1 2.53 (r12 2.48),
-#    b2 5.00 (4.66), b6 4.00 (3.98) — all within the session noise of
-#    the r12-quiet ratios. Per the r12 verdict's conditional, b1/b2/b6
-#    stay on the floor-pinned weak list without re-litigating; their
-#    zero-data scheduling floors (b1/b2 docstrings) and the 5M-distinct
-#    exact-count floor (b6) stand unchanged.
-# 3. No query regressed in code terms: the r13 diff touches the
-#    Iceberg/Hudi readers+backends, the DBAPI sink, and the oracle
-#    roster — none on the headline bench paths; the only bench-path
-#    adjacent change (explicit schema on partitioned lakehouse scans)
-#    removes a per-read warning and an inference pass.
-
-# ---------------------------------------------------------------------------
-# APPENDIX — r14 quiet-box board + e5_semantic_dedup exoneration
-# ---------------------------------------------------------------------------
-# VERDICT r13 #3 asked for a quiet-box re-pin of e5_semantic_dedup's
-# x10 drift (r13 session: 3.30 s vs r12-quiet 1.76 s, path untouched).
-# r14 ran the full protocol on a measured-idle box (load 0.26, 0 user
-# sessions, nothing else running). e5 x10 samples: warmup 6.08,
-# 15.59, 11.48, then 1.64 s — the MIN (the pinned operand) lands at
-# 1.642 s, BELOW r12-quiet's 1.756, scaling_x10 = 1.54 ≈ r12's 1.59.
-# Verdict: the intrinsic cost never moved; the early samples are
-# allocator/JIT warm-up on the 10x replicated Arrow-matmul frame (the
-# same monotonic-warming shape r12's clean boards show, amplified at
-# x10), and the min-based protocol exists precisely to see through it.
-# r13's 3.30 was the same shape sampled before the floor was reached.
-# Board: BENCH_r14_session.json (b6 vs_oracle_min improved 4.0->2.69;
-# b1 2.87 / b2 5.52 within the pinned scheduling-floor band).
-
-# ---------------------------------------------------------------------------
-# APPENDIX — r15 OPTIMIZATION-ROUND session board
-# ---------------------------------------------------------------------------
-# Full protocol board committed as BENCH_r15_session.json (5-sample
-# medians + mins, x10, extras, DuckDB oracle same session). The
-# committed run is the round's SECOND full board: the first ran under
-# heavy co-tenant load (host load 8-15 with zero local processes; its
-# x10 medians carried 2-4x spikes, b4_x10 median 13.39 vs min-scaling
-# 3.71) and predated the last two code changes; the protocol was
-# repeated on a quiet window (load 0.25) — mins agreed within noise
-# across the two runs, pinning the first run's medians as load.
-# Highlights vs BENCH_r14_session.json (OPTIMIZATION_r15.md holds the
-# per-change stash/interleave A/Bs that attribute them):
-#
-# 1. vs_oracle_min: b1 1.93 (r14 2.87), b2 3.47 (5.52), b6 2.86 (2.69)
-#    — box-normalized (Spark and DuckDB share the session), so these
-#    moves are real. b1 now sits ON its pinned ~1.9 zero-data
-#    scheduling floor.
-# 2. Round's code wins on this board: b4 0.68x / b5 0.66x (PIT union
-#    shuffle-width trim: exchange 8 -> 6 columns, constant precombine
-#    field dropped), e6 0.59x (drift reference bounds from parquet
-#    footers + overlapped bin passes), e8 0.58x (catalog bucket-offset
-#    plan cache), e9 0.58x (stats-only per-batch count removed).
-#    e2's 0.62x is the platform factor, not code: the one-aggregation
-#    rewrite that was briefly in during this board was REVERTED on
-#    review (corpus-shuffle + equal-id defects; its e2 wall effect
-#    measured flat either way — OPTIMIZATION_r15.md §6).
-#    A uniform ~0.7-0.8x platform factor separates the two boxes —
-#    the A/Bs in OPTIMIZATION_r15.md isolate code effect from box.
-# 3. Measured dead ends recorded in OPTIMIZATION_r15.md: shuffled-hash
-#    join session default (b4_x10 interleaved: SHJ 3.163 vs SMJ 3.009
-#    — flat), cheaper MinHash permutation families (the 64 min-agg
-#    buffer updates dominate, not the hashing: nohash 1.49 vs xxhash
-#    1.70 vs 0.69 explode floor at x10), b6 exact-distinct (describe
-#    2.974 == lone countDistinct 3.024 — perfect pass overlap).
-
-# ---------------------------------------------------------------------------
-# APPENDIX — r15 A/Bs: hint bookkeeping cost + batch-window pruning win
-# ---------------------------------------------------------------------------
-# 1. HINT OVERHEAD (VERDICT r14 watch-item #2: "confirm the b2 drift is
-#    floor noise, not hint overhead"). python bench.py --hint-ab,
-#    interleaved 9-sample pairs, sf0.1, same box/session:
-#      b1 hints ON  min 0.1927  median 0.2606
-#      b1 hints OFF min 0.1853  median 0.2337
-#      b2 hints ON  min 0.2706  median 0.3178
-#      b2 hints OFF min 0.2657  median 0.3344
-#    Delta on mins: b1 +7 ms, b2 +5 ms — inside per-sample noise
-#    (spreads 0.19-0.31 / 0.27-0.52), and b2's MEDIAN is lower WITH
-#    hints. Verdict: the r14 b2 vs_oracle_min creep (5.0 -> 5.52) is
-#    floor/session noise, not hint bookkeeping; the floor pin stands.
-#    The keep-set walk is pure list arithmetic (~us per node); the
-#    compile-time knob (compile_query(push_hints=False)) stays for
-#    future re-checks.
-# 2. BATCH-WINDOW PRUNING WIN (VERDICT r14 #6). python bench.py
-#    --prune-ab: a 2-week get_batch_data window over a YEAR of
-#    day-partitioned spine history (1.2 M rows, 365 partitions, sf0.1),
-#    with the r15 event-time hint active vs disabled:
-#      spine rows into the PIT union: 46,651 pruned vs 1,200,000
-#        unpruned (25.7x less scanned)
-#      wall clock: pruned min 2.656 / median 3.040 vs unpruned min
-#        3.269 / median 3.589 (~19% faster END-TO-END at a scale where
-#        fixed plan+scheduling costs dominate the 2.6 s)
-#    The rows-scanned operand is the one that scales: at 100 TB the
-#    window-to-history ratio IS the cost ratio, because the pruned
-#    partitions' files are never opened (PartitionFilters below the
-#    PIT window — plan-pinned in tests/test_fv_td_lifecycle.py).
+    main()

@@ -10,6 +10,7 @@ whole-stage codegen. Formulas are identical.
 
 from __future__ import annotations
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .udf import TransformationFunction, TransformationStatistics
@@ -46,24 +47,51 @@ def _make(name, column_expr, return_type="double", output_column_names=None,
     return tf
 
 
-def _min_max(cols, stats):
-    s = _stats_of(stats, "feature")
+def _make_linear(name, fit, stat_fields):
+    """A linear scaler ``(x - offset) / scale`` with ``(offset, scale) =
+    fit(stats)``. The formula is plain float arithmetic, so one function
+    is both the Column expression and its pandas twin. ``fit`` returns
+    None when the fitted window held no non-null value; the output is
+    then NULL (None propagates on a Column, NaN in pandas)."""
+    def expr(cols, stats):
+        x = cols[0]
+        fitted = fit(_stats_of(stats, "feature"))
+        if fitted is None:
+            fitted = (None if isinstance(x, Column) else float("nan"), 1.0)
+        offset, scale = fitted
+        return [(x - offset) / scale]
+
+    return _make(name, expr, stat_fields=stat_fields, pandas_expr=expr)
+
+
+def _fit_min_max(s):
+    if s["min"] is None:
+        return None
     lo, hi = float(s["min"]), float(s["max"])
-    denom = (hi - lo) or 1.0
-    return [(cols[0] - F.lit(lo)) / F.lit(denom)]
+    return lo, (hi - lo) or 1.0
 
 
-def _standard(cols, stats):
-    s = _stats_of(stats, "feature")
-    mean, std = float(s["mean"]), float(s["stddev"] or 1.0)
-    return [(cols[0] - F.lit(mean)) / F.lit(std or 1.0)]
+def _fit_standard(s):
+    if s["mean"] is None:
+        return None
+    return float(s["mean"]), float(s["stddev"] or 1.0) or 1.0
 
 
-def _robust(cols, stats):
-    s = _stats_of(stats, "feature")
-    p25, p50, p75 = [float(p) for p in s["percentiles"]]
-    iqr = (p75 - p25) or 1.0
-    return [(cols[0] - F.lit(p50)) / F.lit(iqr)]
+def _quartiles(s):
+    """``(p25, p50, p75)`` as floats, or None when the fitted window held
+    no non-null value."""
+    pcts = s["percentiles"]
+    if not pcts or None in pcts:
+        return None
+    return tuple(float(p) for p in pcts)
+
+
+def _fit_robust(s):
+    q = _quartiles(s)
+    if q is None:
+        return None
+    p25, p50, p75 = q
+    return p50, (p75 - p25) or 1.0
 
 
 def _label_encode(cols, stats):
@@ -95,30 +123,11 @@ def _one_hot_names(features, stats):
     return [f"{base}_{i}" for i in range(len(vals))] or [base]
 
 
-# -- driver-side pandas twins (ms-latency serving; formula parity with
-# the Column expressions is pinned by tests/test_udf.py) ---------------
-
-def _min_max_pd(series, stats):
-    s = _stats_of(stats, "feature")
-    lo, hi = float(s["min"]), float(s["max"])
-    return [(series[0] - lo) / ((hi - lo) or 1.0)]
-
-
-def _standard_pd(series, stats):
-    s = _stats_of(stats, "feature")
-    mean, std = float(s["mean"]), float(s["stddev"] or 1.0)
-    return [(series[0] - mean) / (std or 1.0)]
-
-
-def _robust_pd(series, stats):
-    s = _stats_of(stats, "feature")
-    p25, p50, p75 = [float(p) for p in s["percentiles"]]
-    return [(series[0] - p50) / ((p75 - p25) or 1.0)]
-
-
 def _quantile_bin(cols, stats):
-    s = _stats_of(stats, "feature")
-    p25, p50, p75 = [float(p) for p in s["percentiles"]]
+    q = _quartiles(_stats_of(stats, "feature"))
+    if q is None:
+        return [F.lit(None).cast("long")]
+    p25, p50, p75 = q
     c = cols[0]
     return [
         F.when(c.isNull(), F.lit(None))
@@ -130,13 +139,17 @@ def _quantile_bin(cols, stats):
     ]
 
 
+# -- driver-side pandas twins of the Column expressions that use F.when
+# (ms-latency serving; formula parity is pinned by
+# tests/test_transformations.py) -----------------------------------------
+
 def _quantile_bin_pd(series, stats):
-    s = _stats_of(stats, "feature")
-    p25, p50, p75 = [float(p) for p in s["percentiles"]]
+    q = _quartiles(_stats_of(stats, "feature"))
 
     def bin_of(v):
-        if v is None or v != v:  # None / NaN
+        if q is None or v is None or v != v:  # no fit / None / NaN
             return None
+        p25, p50, p75 = q
         if v <= p25:
             return 0
         if v <= p50:
@@ -164,18 +177,11 @@ def _one_hot_pd(series, stats):
 # each builtin declares EXACTLY the stat fields its formula reads, so
 # the shared train-split stats pass computes nothing else (a
 # min_max+standard list = one narrow aggregate, zero extra scans)
-min_max_scaler = _make(
-    "min_max_scaler", _min_max, stat_fields=("min", "max"),
-    pandas_expr=_min_max_pd,
+min_max_scaler = _make_linear("min_max_scaler", _fit_min_max, ("min", "max"))
+standard_scaler = _make_linear(
+    "standard_scaler", _fit_standard, ("mean", "stddev")
 )
-standard_scaler = _make(
-    "standard_scaler", _standard, stat_fields=("mean", "stddev"),
-    pandas_expr=_standard_pd,
-)
-robust_scaler = _make(
-    "robust_scaler", _robust, stat_fields=("percentiles",),
-    pandas_expr=_robust_pd,
-)
+robust_scaler = _make_linear("robust_scaler", _fit_robust, ("percentiles",))
 # quartile binning (beyond the reference's five builtins): train-split
 # quartile edges -> ordinal bins 0-3, nulls stay null; shares the
 # percentile stat field with robust_scaler so combining them costs no

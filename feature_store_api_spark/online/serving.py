@@ -25,7 +25,7 @@ from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import SparkSession
 
-from .store import OnlineStore
+from .store import OnlineStore, _aware_to_naive_utc
 
 
 
@@ -61,21 +61,8 @@ def _staleness_cutoff_value(max_staleness, clock=None):
         return clock - max_staleness
     if clock is None:
         clock = _dt.datetime.now(_dt.timezone.utc)
-    if isinstance(clock, _dt.datetime) and clock.tzinfo is not None:
-        clock = clock.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return clock - delta
+    return _aware_to_naive_utc(clock) - delta
 
-
-def _utc_naive_ts(ts):
-    """Coerce a hit's event-time to the cutoff's clock domain: tz-aware
-    datetimes → naive UTC (avoids TypeError on aware<naive); naive
-    datetimes and numerics pass through (already normalized by the
-    store paths)."""
-    import datetime as _dt
-
-    if isinstance(ts, _dt.datetime) and ts.tzinfo is not None:
-        return ts.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return ts
 
 class VectorServer:
     """Serves assembled feature vectors for a FeatureView."""
@@ -291,7 +278,7 @@ class VectorServer:
                 if hit is None:
                     continue
                 if cutoff is not None:
-                    ts = _utc_naive_ts(hit.get(et))
+                    ts = _aware_to_naive_utc(hit.get(et))
                     if ts is not None and ts < cutoff:
                         continue  # expired: withhold, same as a miss
                 vec = rows[i] if rows[i] is not None else dict(entries[i])

@@ -31,6 +31,7 @@ contract.
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
 import shutil
@@ -66,8 +67,6 @@ def _utc_naive_values(rec: Dict) -> Dict:
     UTC offset). Collect-path rows funnel through here so both paths
     serve one clock domain; tz-aware values (TIMESTAMP_LTZ through
     arrow) also coerce to naive UTC."""
-    import datetime as _dt
-
     out = {}
     for k, v in rec.items():
         if isinstance(v, _dt.datetime):
@@ -80,19 +79,14 @@ def _utc_naive_values(rec: Dict) -> Dict:
     return out
 
 
-def _aware_to_naive_utc(rec: Dict) -> Dict:
-    """Coerce only tz-AWARE datetime values to naive UTC; naive values
-    pass through untouched (the arrow read path's naive values are
+def _aware_to_naive_utc(v):
+    """A tz-AWARE datetime as naive UTC; naive datetimes, numbers and
+    None pass through untouched (the arrow read path's naive values are
     already UTC — see ``_utc_naive_values`` for the collect-path twin
     whose naive-as-local inverse must NOT be applied here)."""
-    import datetime as _dt
-
-    out = {}
-    for k, v in rec.items():
-        if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        out[k] = v
-    return out
+    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
+        return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return v
 
 
 def _portable_str(v) -> Optional[str]:
@@ -445,18 +439,9 @@ class OnlineStore:
                 # tz-aware datetimes coerce to naive UTC so a store
                 # whose files mix INT96 (naive through arrow) and
                 # int64-utc (aware) still sorts instead of raising
-                import datetime as _dt
-
                 vals = []
                 for c in order:
-                    v = rec.get(c)
-                    if (
-                        isinstance(v, _dt.datetime)
-                        and v.tzinfo is not None
-                    ):
-                        v = v.astimezone(
-                            _dt.timezone.utc
-                        ).replace(tzinfo=None)
+                    v = _aware_to_naive_utc(rec.get(c))
                     vals.append((v is not None, v if v is not None else 0))
                 return tuple(vals)
 
@@ -480,9 +465,10 @@ class OnlineStore:
                     # inverse is for collect() rows, and it would also
                     # trip on the naive pandas.Timestamp objects arrow
                     # yields for ns-precision (INT96) columns
-                    out.append(_aware_to_naive_utc(
-                        {c: rec.get(c) for c in columns if c not in drop}
-                    ))
+                    out.append({
+                        c: _aware_to_naive_utc(rec.get(c))
+                        for c in columns if c not in drop
+                    })
             return out
         except FileNotFoundError:
             raise

@@ -177,7 +177,6 @@ def describe(
     percentiles: Sequence[float] = (0.25, 0.5, 0.75),
     exact_distinct: bool = False,
     approx_distinct: bool = True,
-    cache_source: bool = False,
 ) -> Dict[str, Dict]:
     """Column profiles via a few concurrent, codegen-friendly passes.
 
@@ -199,138 +198,129 @@ def describe(
     as their own small plan, overlapped on threads. Column pruning
     keeps total scan I/O the same as fused passes.
 
-    ``cache_source=False`` (default) re-scans the pruned parquet per
-    pass — at warehouse scale the projection doesn't fit in cache
-    anyway and pruned scans are what the format is for; measured at
+    Each pass re-scans the pruned source instead of persisting it: at
+    warehouse scale the projection doesn't fit in cache anyway, and at
     sf0.1 the cache write + materialization races cost MORE than the
-    re-scans (0.97 s vs 0.66 s). ``cache_source=True`` persists the
-    narrow projection for callers profiling an expensive upstream
-    (joins/UDFs) where recomputation, not I/O, dominates.
+    re-scans (0.97 s vs 0.66 s).
     """
     cols = list(columns) if columns else df.columns
     schema = {f.name: f.dataType for f in df.schema.fields}
     num_cols = [c for c in cols if _is_numeric(schema[c])]
 
     src = df.select(*cols)
-    if cache_source:
-        src = src.persist()
-    try:
-        # Two scalar aggregates, not one: a min/max whose buffer field is
-        # variable-length (StringType/BinaryType) makes the WHOLE
-        # aggregate ineligible for HashAggregate — Spark plans
-        # SortAggregate and every expression (including the numeric
-        # stddev/avg chain) drops to interpreted row-at-a-time
-        # evaluation (measured 0.24 s → 0.87 s at sf0.1 for one string
-        # min/max added to 24 numeric aggs). Keeping varlen min/max in
-        # their own tiny aggregate leaves the numeric pass on the
-        # codegen'd HashAggregate path; the two jobs overlap on a
-        # thread below. Counts stay in the numeric pass (long buffers)
-        # whatever the column type; timestamp/date/boolean min/max have
-        # fixed-width buffers and stay too.
-        basic = [F.count(F.lit(1)).alias("__total")]
-        varlen = []
-        for c in cols:
-            dt = schema[c]
-            basic.append(F.count(F.col(c)).alias(f"{c}__nonnull"))
-            if _is_numeric(dt):
-                basic.append(F.min(F.col(c)).alias(f"{c}__min"))
-                basic.append(F.max(F.col(c)).alias(f"{c}__max"))
-                basic.append(F.sum(F.col(c)).alias(f"{c}__sum"))
-                basic.append(F.avg(F.col(c)).alias(f"{c}__mean"))
-                basic.append(F.stddev(F.col(c)).alias(f"{c}__stddev"))
-            elif isinstance(dt, (T.StringType, T.BinaryType)):
-                varlen.append(F.min(F.col(c)).alias(f"{c}__min"))
-                varlen.append(F.max(F.col(c)).alias(f"{c}__max"))
-            elif isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType, T.BooleanType)):
-                basic.append(F.min(F.col(c)).alias(f"{c}__min"))
-                basic.append(F.max(F.col(c)).alias(f"{c}__max"))
+    # Two scalar aggregates, not one: a min/max whose buffer field is
+    # variable-length (StringType/BinaryType) makes the WHOLE
+    # aggregate ineligible for HashAggregate — Spark plans
+    # SortAggregate and every expression (including the numeric
+    # stddev/avg chain) drops to interpreted row-at-a-time
+    # evaluation (measured 0.24 s → 0.87 s at sf0.1 for one string
+    # min/max added to 24 numeric aggs). Keeping varlen min/max in
+    # their own tiny aggregate leaves the numeric pass on the
+    # codegen'd HashAggregate path; the two jobs overlap on a
+    # thread below. Counts stay in the numeric pass (long buffers)
+    # whatever the column type; timestamp/date/boolean min/max have
+    # fixed-width buffers and stay too.
+    basic = [F.count(F.lit(1)).alias("__total")]
+    varlen = []
+    for c in cols:
+        dt = schema[c]
+        basic.append(F.count(F.col(c)).alias(f"{c}__nonnull"))
+        if _is_numeric(dt):
+            basic.append(F.min(F.col(c)).alias(f"{c}__min"))
+            basic.append(F.max(F.col(c)).alias(f"{c}__max"))
+            basic.append(F.sum(F.col(c)).alias(f"{c}__sum"))
+            basic.append(F.avg(F.col(c)).alias(f"{c}__mean"))
+            basic.append(F.stddev(F.col(c)).alias(f"{c}__stddev"))
+        elif isinstance(dt, (T.StringType, T.BinaryType)):
+            varlen.append(F.min(F.col(c)).alias(f"{c}__min"))
+            varlen.append(F.max(F.col(c)).alias(f"{c}__max"))
+        elif isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType, T.BooleanType)):
+            basic.append(F.min(F.col(c)).alias(f"{c}__min"))
+            basic.append(F.max(F.col(c)).alias(f"{c}__max"))
 
-        # the distinct pass is independent of the scalar pass — submit it
-        # from a second thread so the two Spark jobs overlap (the
-        # scheduler interleaves their stages across cores; per-shape
-        # codegen compile, the dominant cost on short inputs, overlaps
-        # too). The percentile pass still waits on min/max from pass 1.
-        # a multi-column COUNT(DISTINCT) compiles to an Expand (k× the
-        # rows through a two-level aggregate, off the fast path:
-        # measured 0.9 s for 5 columns at sf0.1). One single-distinct
-        # aggregate PER COLUMN is a plain partial-aggregated plan;
-        # submitted concurrently they finish in roughly the slowest
-        # column's time (~0.3 s wall) while the numeric pass runs on
-        # the main thread. Same trick as the percentile pass — total
-        # scan I/O is unchanged (each job prunes to one column).
-        # (measured dead end, kept as a note: fusing each numeric
-        # column's exact countDistinct into its percentile bin job —
-        # per-bin distincts sum exactly over equi-width bins — LOOKS
-        # like it halves the job count, but the fused groupBy(bin)
-        # + countDistinct turns a 2-int-shuffle bin job into a
-        # distinct-value shuffle and measured b6 1.14 s → 1.40 s at
-        # sf0.1. Separate small jobs overlapped on threads win.)
-        side_aggs = []
-        if exact_distinct:
-            side_aggs += [
-                [F.countDistinct(F.col(c)).alias(f"{c}__exact_distinct")]
-                for c in cols
-            ]
-        elif approx_distinct:
-            side_aggs.append([
-                F.approx_count_distinct(F.col(c)).alias(f"{c}__approx_distinct")
-                for c in cols
-            ])
-        if varlen:
-            side_aggs.append(varlen)
-        futs = []
-        pct_fut = None
-        if side_aggs or (num_cols and percentiles):
-            from concurrent.futures import ThreadPoolExecutor
+    # the distinct pass is independent of the scalar pass — submit it
+    # from a second thread so the two Spark jobs overlap (the
+    # scheduler interleaves their stages across cores; per-shape
+    # codegen compile, the dominant cost on short inputs, overlaps
+    # too). The percentile pass still waits on min/max from pass 1.
+    # a multi-column COUNT(DISTINCT) compiles to an Expand (k× the
+    # rows through a two-level aggregate, off the fast path:
+    # measured 0.9 s for 5 columns at sf0.1). One single-distinct
+    # aggregate PER COLUMN is a plain partial-aggregated plan;
+    # submitted concurrently they finish in roughly the slowest
+    # column's time (~0.3 s wall) while the numeric pass runs on
+    # the main thread. Same trick as the percentile pass — total
+    # scan I/O is unchanged (each job prunes to one column).
+    # (measured dead end, kept as a note: fusing each numeric
+    # column's exact countDistinct into its percentile bin job —
+    # per-bin distincts sum exactly over equi-width bins — LOOKS
+    # like it halves the job count, but the fused groupBy(bin)
+    # + countDistinct turns a 2-int-shuffle bin job into a
+    # distinct-value shuffle and measured b6 1.14 s → 1.40 s at
+    # sf0.1. Separate small jobs overlapped on threads win.)
+    side_aggs = []
+    if exact_distinct:
+        side_aggs += [
+            [F.countDistinct(F.col(c)).alias(f"{c}__exact_distinct")]
+            for c in cols
+        ]
+    elif approx_distinct:
+        side_aggs.append([
+            F.approx_count_distinct(F.col(c)).alias(f"{c}__approx_distinct")
+            for c in cols
+        ])
+    if varlen:
+        side_aggs.append(varlen)
+    futs = []
+    pct_fut = None
+    if side_aggs or (num_cols and percentiles):
+        from concurrent.futures import ThreadPoolExecutor
 
-            pool = ThreadPoolExecutor(max_workers=min(len(side_aggs) + 1, 9))
-            futs = [
-                pool.submit(lambda a=a: src.agg(*a).collect()[0].asDict())
-                for a in side_aggs
-            ]
-            # The percentile bin pass only needs each column's min/max.
-            # When the source is a plain file scan those are in the
-            # parquet FOOTERS (exact, driver-side, no job) — so the
-            # pass launches HERE, concurrent with the basic aggregate,
-            # instead of serializing behind it. Identical bins either
-            # way (footer min/max == aggregate min/max for an
-            # unfiltered scan); non-file-scan sources fall back to the
-            # post-aggregate ordering below.
-            if num_cols and percentiles:
-                footer_mm = _file_scan_minmax(src, num_cols)
-                if all(c in footer_mm for c in num_cols):
-                    pct_fut = pool.submit(
-                        approx_percentiles_multi,
-                        src, num_cols, list(percentiles), footer_mm,
-                    )
-            pool.shutdown(wait=False)
-
-        row = src.agg(*basic).collect()[0].asDict()
-        # the percentile/fused pass depends ONLY on the basic row's
-        # min/max — run it BEFORE gathering the side futures so its bin
-        # jobs overlap the still-running distinct/varlen jobs instead
-        # of serializing after them
+        pool = ThreadPoolExecutor(max_workers=min(len(side_aggs) + 1, 9))
+        futs = [
+            pool.submit(lambda a=a: src.agg(*a).collect()[0].asDict())
+            for a in side_aggs
+        ]
+        # The percentile bin pass only needs each column's min/max.
+        # When the source is a plain file scan those are in the
+        # parquet FOOTERS (exact, driver-side, no job) — so the
+        # pass launches HERE, concurrent with the basic aggregate,
+        # instead of serializing behind it. Identical bins either
+        # way (footer min/max == aggregate min/max for an
+        # unfiltered scan); non-file-scan sources fall back to the
+        # post-aggregate ordering below.
         if num_cols and percentiles:
-            if pct_fut is not None:
-                pctls, _ = pct_fut.result()
-            else:
-                minmax = {
-                    c: (row[f"{c}__min"], row[f"{c}__max"]) for c in num_cols
-                }
-                pctls, _ = approx_percentiles_multi(
-                    src, num_cols, list(percentiles), minmax
+            footer_mm = _file_scan_minmax(src, num_cols)
+            if all(c in footer_mm for c in num_cols):
+                pct_fut = pool.submit(
+                    approx_percentiles_multi,
+                    src, num_cols, list(percentiles), footer_mm,
                 )
-            for c in num_cols:
-                row[f"{c}__percentiles"] = pctls.get(c)
-        for fut in futs:
-            row.update(fut.result())
-        if exact_distinct and approx_distinct:
-            for c in cols:
-                row[f"{c}__approx_distinct"] = row[f"{c}__exact_distinct"]
-        total = row["__total"]
-    finally:
-        if cache_source:
-            src.unpersist()
+        pool.shutdown(wait=False)
+
+    row = src.agg(*basic).collect()[0].asDict()
+    # the percentile/fused pass depends ONLY on the basic row's
+    # min/max — run it BEFORE gathering the side futures so its bin
+    # jobs overlap the still-running distinct/varlen jobs instead
+    # of serializing after them
+    if num_cols and percentiles:
+        if pct_fut is not None:
+            pctls, _ = pct_fut.result()
+        else:
+            minmax = {
+                c: (row[f"{c}__min"], row[f"{c}__max"]) for c in num_cols
+            }
+            pctls, _ = approx_percentiles_multi(
+                src, num_cols, list(percentiles), minmax
+            )
+        for c in num_cols:
+            row[f"{c}__percentiles"] = pctls.get(c)
+    for fut in futs:
+        row.update(fut.result())
+    if exact_distinct and approx_distinct:
+        for c in cols:
+            row[f"{c}__approx_distinct"] = row[f"{c}__exact_distinct"]
+    total = row["__total"]
 
     out: Dict[str, Dict] = {}
     for c in cols:

@@ -74,7 +74,7 @@ def _compile_node(
     online: bool,
     filter_refs: Set[Tuple[int, str]],
     extra_keep: Tuple[str, ...] = (),
-    push_hints: bool = True,
+    skip_filters: bool = False,
 ):
     """Compile one Query node.
 
@@ -95,7 +95,7 @@ def _compile_node(
     # (skip_filters preview contract) or when latest-per-key resolution
     # runs first (online): pre-filtering the source would resurrect
     # superseded versions / filter the preview sample
-    if push_hints and not online and q._filter is not None:
+    if not skip_filters and not online and q._filter is not None:
         try:
             refs = q._filter.referenced_features()
         except Exception:
@@ -119,7 +119,7 @@ def _compile_node(
     # the pushed projection (a default-valued feature may legitimately
     # be absent), never an error.
     cols_hint: Optional[List[str]] = None
-    if push_hints:
+    if not skip_filters:
         cols_hint = []
         for c in (
             [f.name for f in q.left_features]
@@ -208,7 +208,7 @@ def _compile_node(
         lkeys, rkeys = _join_keys(q, join)
         rdf, rsel, rcolmap, rpending = _compile_node(
             join.query, spark, online, filter_refs,
-            extra_keep=tuple(rkeys), push_hints=push_hints,
+            extra_keep=tuple(rkeys), skip_filters=skip_filters,
         )
         using = bool(lkeys) and lkeys == rkeys
         absent = [k for k in lkeys if k not in df.columns]
@@ -319,16 +319,12 @@ def _make_resolver(colmap):
 
 def compile_query(
     q, spark: SparkSession, online: bool = False, skip_filters: bool = False,
-    push_hints: bool = True,
 ) -> DataFrame:
     """``skip_filters=True`` compiles the plan WITHOUT the query's
     WHERE conditions — the online-preview contract: the reference's
     preview statement strips everything from `` WHERE `` and appends
-    LIMIT (``core/online_store_sql_engine.py:464-465``).
-
-    ``push_hints=False`` keeps the exact semantics but skips handing
-    filter/projection hints to sources — an A/B knob for measuring the
-    hint bookkeeping's plan-time cost (bench.py appendix)."""
+    LIMIT (``core/online_store_sql_engine.py:464-465``). Sources then
+    get no filter or projection hints either."""
     logic_all = q.filters
     filter_refs = (
         {
@@ -340,8 +336,7 @@ def compile_query(
         else set()
     )
     df, sel, colmap, pending = _compile_node(
-        q, spark, online, filter_refs,
-        push_hints=push_hints and not skip_filters,
+        q, spark, online, filter_refs, skip_filters=skip_filters,
     )
 
     cond = None

@@ -246,3 +246,36 @@ def test_quantile_binner_spark_and_pandas_parity(spark):
     pd_out = apply_transformations_pandas(pdf, [tf], stats=stats)
     assert list(pd_out["quantile_binner_v"][:3]) == [0, 1, 3]
     assert pd_out["quantile_binner_v"][3] is None or pd_out["quantile_binner_v"].isna()[3]
+
+
+@pytest.mark.parametrize("exact_pctl", [False, True])
+def test_scalers_and_binner_all_null_window_yield_null(spark, exact_pctl):
+    """A fitted window where every value of the feature is NULL has no
+    min/max, mean or percentiles to transform by: the scalers and the
+    quartile binner return NULL on the Spark path and on the driver-side
+    pandas path instead of failing on float(None)."""
+    from feature_store_api_spark.functions.builtin_transformations import (
+        quantile_binner,
+    )
+    from feature_store_api_spark.functions.udf import (
+        apply_transformations_pandas,
+    )
+    from feature_store_api_spark.operators.statistics import (
+        transformation_statistics,
+    )
+
+    train = spark.createDataFrame([(1, None), (2, None)], "k long, v double")
+    tfs = [min_max_scaler("v"), standard_scaler("v"), robust_scaler("v"),
+           quantile_binner("v")]
+    stats = transformation_statistics(train, ["v"], exact_pctl=exact_pctl)
+    types = {"min_max_scaler_v": "double", "standard_scaler_v": "double",
+             "robust_scaler_v": "double", "quantile_binner_v": "bigint"}
+
+    scored = spark.createDataFrame([(1, 5.0), (2, None)], "k long, v double")
+    out = apply_transformations(scored, tfs, stats=stats)
+    assert {n: t for n, t in out.dtypes if n in types} == types
+    assert all(r[n] is None for r in out.collect() for n in types)
+
+    pdf = pd.DataFrame({"k": [1, 2], "v": [5.0, None]})
+    pd_out = apply_transformations_pandas(pdf, tfs, stats=stats)
+    assert all(pd_out[n].isna().all() for n in types)
